@@ -36,21 +36,17 @@ def cdc_pipeline_replicating(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation (the checkpoint/state lifecycle is the thing under
     test; rerun-resume idempotence is covered by
     tests/test_pipeline.py)."""
-    from pg2ch_spark.pipeline import TableSpec, run_pipeline
+    from pg2ch_spark.pipeline import TableSpec, read_state, run_pipeline
     from pg2ch_spark.streaming.runner import scratch_dir
 
     base = scratch_dir("pg2ch_pipeq_")
     root = base + "/" + uuid.uuid4().hex[:8]
+    spec = TableSpec(main_table="t", engine="ReplacingMergeTree")
     try:
-        res = run_pipeline(
-            spark,
-            [TableSpec(main_table="t", engine="ReplacingMergeTree")],
-            sf_dir,
-            root,
-        )
-        state = res.states["t"]
-        # localCheckpoint already materialized by run_pipeline; safe to
-        # delete the backing dirs after returning the plan.
+        run_pipeline(spark, [spec], sf_dir, root)
+        # result handoff: the backing dir is removed before the caller
+        # evaluates the frame
+        state = read_state(spark, spec, root).localCheckpoint(eager=True)
         return state.select("key", "ver", "op", "value")
     finally:
         shutil.rmtree(base, ignore_errors=True)

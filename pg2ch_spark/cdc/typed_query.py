@@ -170,7 +170,7 @@ def cdc_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     one walsender session (bounded here by the key sample, as pg2ch's
     is by one slot's WAL bandwidth); everything from the spool on is a
     distributed stream → sink plan, fanning out by spool file."""
-    from pg2ch_spark.pipeline import TableSpec, run_pipeline
+    from pg2ch_spark.pipeline import TableSpec, read_state, run_pipeline
     from pg2ch_spark.sources.pgoutput import WalDecoder
     from pg2ch_spark.sources.spool import (
         spool_transactions,
@@ -245,14 +245,11 @@ def cdc_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 schema=typed_spool_schema("key", "bigint", _TYPED_COLUMNS),
             )
         )
-        res = run_pipeline(
-            spark,
-            [TableSpec(main_table="orders_t", columns=_TYPED_COLUMNS)],
-            spool,
-            root,
-            source_format="cdc",
-        )
-        state = res.states["orders_t"]
+        spec = TableSpec(main_table="orders_t", columns=_TYPED_COLUMNS)
+        run_pipeline(spark, [spec], spool, root, source_format="cdc")
+        # result handoff: the backing dir is removed before the caller
+        # evaluates the frame
+        state = read_state(spark, spec, root).localCheckpoint(eager=True)
         return state.where(F.col("op") != "D").select(
             "key",
             F.col("price").cast("string").alias("price"),
@@ -296,7 +293,7 @@ def cdc_typed_collapsing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the signed log is a distributed write; netting is one
     groupBy-window pass per key partition."""
-    from pg2ch_spark.pipeline import TableSpec, run_pipeline
+    from pg2ch_spark.pipeline import TableSpec, read_state, run_pipeline
     from pg2ch_spark.streaming.runner import scratch_dir
 
     o = catalog.load(spark, sf_dir, "orders").where(F.col("o_orderkey") % 83 == 1)
@@ -329,22 +326,16 @@ def cdc_typed_collapsing(spark: SparkSession, sf_dir: str) -> DataFrame:
     spool, root = base + "/spool", base + "/state"
     try:
         signed.repartition(2).write.mode("overwrite").parquet(spool)
-        res = run_pipeline(
-            spark,
-            [
-                TableSpec(
-                    main_table="t",
-                    engine="CollapsingMergeTree",
-                    key_col="key",
-                    columns={"price": "decimal(18,2)"},
-                )
-            ],
-            spool,
-            root,
-            source_format="cdc",
+        spec = TableSpec(
+            main_table="t",
+            engine="CollapsingMergeTree",
+            key_col="key",
+            columns={"price": "decimal(18,2)"},
         )
-        return res.states["t"].select(
-            "key", F.col("price").cast("string").alias("price")
-        )
+        run_pipeline(spark, [spec], spool, root, source_format="cdc")
+        # result handoff: the backing dir is removed before the caller
+        # evaluates the frame
+        state = read_state(spark, spec, root).localCheckpoint(eager=True)
+        return state.select("key", F.col("price").cast("string").alias("price"))
     finally:
         shutil.rmtree(base, ignore_errors=True)

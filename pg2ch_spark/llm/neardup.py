@@ -425,9 +425,7 @@ def _prefix_len(threshold: float):
     ).cast("int")
 
 
-def _candidates_jaccard(
-    docs_g: DataFrame, t: float, positional: bool = True
-) -> DataFrame:
+def _candidates_jaccard(docs_g: DataFrame, t: float) -> DataFrame:
     """Two-sided prefix-filtered candidates for Jaccard >= t — EXACT
     (zero recall loss), the classic AllPairs/PPJoin prefix lemma: order
     all shingles by a global total order; if J(A,B) >= t, the prefixes
@@ -449,11 +447,6 @@ def _candidates_jaccard(
     sf0.1 (fixture corpus, ~30-word vocabulary, t=0.5) 309,409
     candidates -> 124,804, identical output (oracle-exact on all three
     consuming keys re-proven at sf0.01).
-
-    ``positional=False`` disables the r8 positional filter — a
-    MEASUREMENT hook only (scripts/ppjoin_ab.py's paired A/B; the
-    result set is identical either way, the filter is recall-lossless
-    and the verify stage re-checks every candidate exactly).
 
     r9 paired A/B (VERDICT r8 item 1 — the r8 driver bench showed the
     three consuming keys 2.3-3.1x slower and asked whether the filter
@@ -483,15 +476,14 @@ def _candidates_jaccard(
         (F.col("doc_a") < F.col("doc_b"))
         & (F.col("n_b") >= F.ceil(F.lit(t) * F.col("n_a")))
         & (F.col("n_a") >= F.ceil(F.lit(t) * F.col("n_b")))
-    )
-    if positional:
         # positional overlap upper bound vs the Jaccard overlap
         # requirement (real-valued comparison: an integer bound
         # >= the real requirement iff >= its ceiling)
-        cond = cond & (
+        & (
             F.least(F.col("n_a") - F.col("_pa"), F.col("n_b") - F.col("_pb"))
             >= F.lit(t / (1.0 + t)) * (F.col("n_a") + F.col("n_b"))
         )
+    )
     return (
         a.join(b, "g")
         .where(cond)
@@ -502,9 +494,7 @@ def _candidates_jaccard(
     )
 
 
-def _candidates_containment(
-    docs_g: DataFrame, c: float, positional: bool = False
-) -> DataFrame:
+def _candidates_containment(docs_g: DataFrame, c: float) -> DataFrame:
     """Small-side-prefix candidates for containment >= c — EXACT. The
     min-size semantics break the two-sided lemma (the larger doc's
     own-size prefix can end before every common shingle), so the
@@ -517,7 +507,7 @@ def _candidates_containment(
     hot shingles out of prefixes, so inverted lists of stopword-grams
     never pair cold docs.
 
-    r9: the r8 POSITIONAL filter now defaults OFF here (it stays ON in
+    r9: no r8 POSITIONAL filter here (it stays in
     `_candidates_jaccard`, where it is the difference between
     completing and filling the disk at 100x — see that docstring). For
     containment it is structurally weak: at c=0.9 the prefix is the
@@ -529,35 +519,24 @@ def _candidates_containment(
     evaluation costs 5% at sf0.1 and 2.9x wall at 10xu (15.4 s vs
     5.3 s, stable across interleaved rounds). Same result set either
     way — the filter is recall-lossless and the verify stage re-checks
-    every candidate exactly; the flag remains a measurement hook
-    (scripts/ppjoin_ab.py)."""
+    every candidate exactly."""
     small = docs_g.select(
         "doc_id",
         "n",
-        F.posexplode(F.slice("grams", F.lit(1), _prefix_len(c))).alias("p", "g"),
+        F.explode(F.slice("grams", F.lit(1), _prefix_len(c))).alias("g"),
     )
     full = docs_g.select(
         F.col("doc_id").alias("_fid"),
         F.col("n").alias("_fn"),
-        F.posexplode("grams").alias("_fp", "g"),
+        F.explode("grams").alias("g"),
     )
     swap = F.col("_fid") < F.col("doc_id")
-    joined = small.join(full, "g").where(
-        (F.col("_fn") > F.col("n"))
-        | ((F.col("_fn") == F.col("n")) & (F.col("_fid") > F.col("doc_id")))
-    )
-    if positional:
-        # r8 PPJoin positional filter (exact — see _candidates_jaccard;
-        # ``positional=False`` is the same measurement hook): C >= c
-        # needs o >= c*n (n = smaller side); the first common gram's
-        # positions bound o <= min(n - p, _fn - _fp), and a true pair
-        # always survives through its first-common-gram row.
-        joined = joined.where(
-            F.least(F.col("n") - F.col("p"), F.col("_fn") - F.col("_fp"))
-            >= F.lit(c) * F.col("n")
-        )
     return (
-        joined
+        small.join(full, "g")
+        .where(
+            (F.col("_fn") > F.col("n"))
+            | ((F.col("_fn") == F.col("n")) & (F.col("_fid") > F.col("doc_id")))
+        )
         .select(
             F.least("doc_id", "_fid").alias("doc_a"),
             F.greatest("doc_id", "_fid").alias("doc_b"),

@@ -113,7 +113,8 @@ def spec_from_mapping(m: dict) -> TableSpec:
 
 @dataclass
 class PipelineResult:
-    states: dict[str, DataFrame] = field(default_factory=dict)
+    # micro-batches consumed per table this run; the replicated state
+    # itself is read on demand through `read_state`
     batches: dict[str, int] = field(default_factory=dict)
 
 
@@ -369,6 +370,35 @@ def build_sink(spark: SparkSession, spec: TableSpec, state_root: str):
     )
 
 
+def read_state(spark: SparkSession, spec: TableSpec, state_root: str) -> DataFrame:
+    """The replicated state of one table (the engine's FINAL view:
+    latest row per key, net-positive keys, or the append log) — the
+    only code path that reads sink state back. Buffered sinks flush
+    first, so the read sees every buffered batch. Lazy: the frame reads
+    ``state_root`` when evaluated, so a caller that removes the root
+    first must materialize it. A table that never received a batch
+    reads as an empty frame with the engine's declared schema, so
+    downstream .select/.join never see None."""
+    sink = build_sink(spark, spec, state_root)
+    final = sink.final() if hasattr(sink, "final") else sink.state()
+    if final is not None:
+        return final
+    if spec.engine == "CollapsingMergeTree" and spec.columns is None:
+        return spark.createDataFrame([], f"{spec.key_col} bigint, net bigint")
+    if spec.columns is not None:
+        sign = "sign int, " if spec.engine == "CollapsingMergeTree" else ""
+        cols = ", ".join(f"{n} {t}" for n, t in spec.columns.items())
+        return spark.createDataFrame(
+            [],
+            f"{spec.key_col} {spec.key_type}, {spec.ver_col} bigint, "
+            f"op string, {sign}{cols}",
+        )
+    return spark.createDataFrame(
+        [],
+        f"{spec.key_col} bigint, {spec.ver_col} bigint, op string, value double",
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     specs: list[TableSpec],
@@ -383,10 +413,12 @@ def run_pipeline(
     """Replicate every configured table, availableNow (≙ catch-up run
     of a continuous daemon; rerunning resumes from each checkpoint).
 
-    Per table: stream the source, derive the CDC log (R3), feed the
-    engine sink via foreachBatch (R5-R9), record the final state.
-    Tables are independent pipelines exactly as in the reference — a
-    failure in one does not advance the others' offsets.
+    Per table: stream the source, derive the CDC log (R3) and feed the
+    engine sink via foreachBatch (R5-R9). Like pg2ch's daemon, a pass
+    only flushes deltas and never reads a table back; callers that
+    want the replicated state ask `read_state`. Tables are independent
+    pipelines exactly as in the reference — a failure in one does not
+    advance the others' offsets.
 
     ``source_format``: "events" streams ``<sf_dir>/events.parquet`` and
     derives the CDC log from it (the fixture contract); "cdc" streams
@@ -414,7 +446,13 @@ def run_pipeline(
     sink state), so at a 100-table deployment serial catch-up latency
     is additive for no reason; pg2ch interleaves tables within one WAL
     stream for the same effect. Default 1 preserves strictly serial
-    behavior."""
+    behavior.
+
+    ``flush_buffers=False`` (daemon timer mode,
+    ``inactivity_merge_timeout_s``): the two-tier buffers PERSIST
+    across passes — merges happen at merge_threshold or by the
+    daemon's inactivity timer, not unconditionally per pass (pg2ch's
+    actual topology)."""
     from pg2ch_spark.streaming.queries import _events_schema
     from pg2ch_spark.streaming.runner import (
         _few_state_partitions,
@@ -550,65 +588,24 @@ def run_pipeline(
             # source is per-invocation scratch — reclaim it
             if _src_dir is not None:
                 shutil.rmtree(_src_dir, ignore_errors=True)
-        if not flush_buffers:
-            # daemon timer mode (``inactivity_merge_timeout_s``): the
-            # two-tier buffers PERSIST across passes — merges happen at
-            # merge_threshold or by the daemon's inactivity timer, not
-            # unconditionally per pass (pg2ch's actual topology). No
-            # state read either: reading a Buffered sink forces the
-            # flush this mode exists to defer.
-            return None, n_batches
-        if isinstance(sink, BufferedMergeSink):
+        if flush_buffers and isinstance(sink, BufferedMergeSink):
             sink.flush()  # ≙ pg2ch's graceful-stop final merge
-        final = sink.final() if hasattr(sink, "final") else sink.state()
-        if final is None:
-            # zero-batch stream: the sink path was never created; hand
-            # back an empty frame with the engine's declared schema so
-            # downstream .select/.join never see None
-            if spec.engine == "CollapsingMergeTree" and spec.columns is None:
-                final = spark.createDataFrame([], f"{spec.key_col} bigint, net bigint")
-            elif spec.columns is not None:
-                sign = (
-                    "sign int, " if spec.engine == "CollapsingMergeTree" else ""
-                )
-                cols = ", ".join(f"{n} {t}" for n, t in spec.columns.items())
-                final = spark.createDataFrame(
-                    [],
-                    f"{spec.key_col} {spec.key_type}, {spec.ver_col} bigint, "
-                    f"op string, {sign}{cols}",
-                )
-            else:
-                final = spark.createDataFrame(
-                    [],
-                    f"{spec.key_col} bigint, {spec.ver_col} bigint, "
-                    "op string, value double",
-                )
-        else:
-            final = final.localCheckpoint(eager=True)
-        return final, n_batches
+        return n_batches
 
     if max_concurrent_tables <= 1 or len(specs) <= 1:
         for spec in specs:
-            final, n = replicate_one(spec)
-            if final is not None:
-                result.states[spec.main_table] = final
-            result.batches[spec.main_table] = n
+            result.batches[spec.main_table] = replicate_one(spec)
     else:
         from concurrent.futures import ThreadPoolExecutor
 
-        from pg2ch_spark.streaming.runner import _few_state_partitions as _fsp
-
-        with _fsp(spark):
+        with _few_state_partitions(spark):
             with ThreadPoolExecutor(max_workers=max_concurrent_tables) as ex:
                 futures = {
                     spec.main_table: ex.submit(replicate_one, spec, False)
                     for spec in specs
                 }
             for name, fut in futures.items():
-                final, n = fut.result()  # re-raises a table's failure
-                if final is not None:
-                    result.states[name] = final
-                result.batches[name] = n
+                result.batches[name] = fut.result()  # re-raises a table's failure
     return result
 
 

@@ -19,6 +19,7 @@ import pytest
 
 from pg2ch_spark.pipeline import (
     TableSpec,
+    read_state,
     run_pipeline,
     spec_from_mapping,
     teardown,
@@ -87,29 +88,39 @@ def _duck(pipe_sf_dir):
     return duckdb.connect(), CDC_SQL.format(path=pipe_sf_dir)
 
 
+def _state(pipe_result, table):
+    spark, _, state_root, specs, _ = pipe_result
+    spec = next(s for s in specs if s.main_table == table)
+    return read_state(spark, spec, state_root)
+
+
 def test_multibatch_replay_ran_two_batches(pipe_result):
     *_, res = pipe_result
     assert res.batches["t_replacing"] >= 2  # one per file
 
 
 def test_replacing_state_matches_oracle(pipe_result):
-    spark, sf, *_ , res = pipe_result
+    spark, sf, *_ = pipe_result
     con, cdc = _duck(sf)
     expected = con.execute(
         f"WITH cdc AS ({cdc}) SELECT key, ver, op, value FROM cdc "
         "QUALIFY row_number() OVER (PARTITION BY key ORDER BY ver DESC) = 1"
     ).df()
     r = compare_frames(
-        "replacing", res.states["t_replacing"].toPandas(), expected
+        "replacing", _state(pipe_result, "t_replacing").toPandas(), expected
     )
     assert r.ok, str(r)
 
 
 def test_buffered_replacing_equals_single_tier(pipe_result):
-    spark, *_ , res = pipe_result
-    a = res.states["t_replacing"].toPandas().sort_values("key").reset_index(drop=True)
+    a = (
+        _state(pipe_result, "t_replacing")
+        .toPandas()
+        .sort_values("key")
+        .reset_index(drop=True)
+    )
     b = (
-        res.states["t_replacing_buffered"]
+        _state(pipe_result, "t_replacing_buffered")
         .toPandas()
         .sort_values("key")
         .reset_index(drop=True)
@@ -157,11 +168,11 @@ def test_collapsing_signed_log_matches_lag_oracle(pipe_result):
 
 
 def test_append_log_is_the_full_change_stream(pipe_result):
-    spark, sf, *_ , res = pipe_result
+    spark, sf, *_ = pipe_result
     con, cdc = _duck(sf)
     expected = con.execute(f"WITH cdc AS ({cdc}) SELECT * FROM cdc").df()
     got = (
-        res.states["t_append"].select("key", "ver", "op", "value").toPandas()
+        _state(pipe_result, "t_append").select("key", "ver", "op", "value").toPandas()
     )
     r = compare_frames("append", got, expected)
     assert r.ok, str(r)
@@ -171,10 +182,10 @@ def test_rerun_is_idempotent(pipe_result):
     """Re-running against the same state_root resumes from the
     checkpoint: zero new batches, states unchanged."""
     spark, sf, state_root, specs, res = pipe_result
-    before = res.states["t_replacing"].toPandas().sort_values("key")
+    before = _state(pipe_result, "t_replacing").toPandas().sort_values("key")
     res2 = run_pipeline(spark, specs, sf, state_root, max_files_per_trigger=1)
     assert all(n == 0 for n in res2.batches.values()), res2.batches
-    after = res2.states["t_replacing"].toPandas().sort_values("key")
+    after = _state(pipe_result, "t_replacing").toPandas().sort_values("key")
     pd.testing.assert_frame_equal(
         before.reset_index(drop=True), after.reset_index(drop=True)
     )
@@ -323,8 +334,7 @@ def test_collapsing_snapshot_staging_crash_recovers(spark, tmp_path):
 
 
 def test_append_state_has_no_synthetic_epoch_column(pipe_result):
-    *_, res = pipe_result
-    cols = set(res.states["t_append"].columns)
+    cols = set(_state(pipe_result, "t_append").columns)
     assert cols == {"key", "ver", "op", "value"}
 
 
@@ -349,13 +359,13 @@ def test_zero_batch_stream_yields_empty_typed_state(spark, tmp_path):
         TableSpec(main_table="t_c", engine="CollapsingMergeTree"),
         TableSpec(main_table="t_a", engine="MergeTree"),
     ]
-    res = run_pipeline(spark, specs, str(sf), state_root)
-    for t in ("t_r", "t_a"):
-        df = res.states[t]
+    run_pipeline(spark, specs, str(sf), state_root)
+    for spec in specs[0], specs[2]:
+        df = read_state(spark, spec, state_root)
         assert df is not None and df.count() == 0
         assert set(df.columns) == {"key", "ver", "op", "value"}
         df.select("key", "value").count()  # selectable, typed
-    dfc = res.states["t_c"]
+    dfc = read_state(spark, specs[1], state_root)
     assert dfc is not None and dfc.count() == 0
     assert set(dfc.columns) == {"key", "net"}
     teardown(state_root)
@@ -419,13 +429,16 @@ def test_bucketed_spec_equals_single_tier(spark, pipe_sf_dir, tmp_path_factory):
             n_buckets=8,
         ),
     ]
-    res = run_pipeline(
-        spark, specs, pipe_sf_dir, state_root, max_files_per_trigger=1
-    )
+    run_pipeline(spark, specs, pipe_sf_dir, state_root, max_files_per_trigger=1)
     try:
-        a = res.states["t_plain"].toPandas().sort_values("key").reset_index(drop=True)
+        a = (
+            read_state(spark, specs[0], state_root)
+            .toPandas()
+            .sort_values("key")
+            .reset_index(drop=True)
+        )
         b = (
-            res.states["t_bucketed"]
+            read_state(spark, specs[1], state_root)
             .toPandas()
             .sort_values("key")
             .reset_index(drop=True)
@@ -435,6 +448,47 @@ def test_bucketed_spec_equals_single_tier(spark, pipe_sf_dir, tmp_path_factory):
         assert all(d.startswith("b") for d in bucket_dirs) and bucket_dirs
     finally:
         teardown(state_root)
+
+
+def test_pass_reads_no_state_and_checkpoints_nothing(
+    spark, pipe_sf_dir, tmp_path, monkeypatch
+):
+    """A pass only flushes deltas, as pg2ch's daemon does: no table is
+    read back or localCheckpointed on the way out (the derived-log
+    collapsing sink is left out — its merge checkpoints its own carry).
+    The state is still all there for `read_state` to find."""
+    df_cls = type(spark.range(1))  # the session's concrete DataFrame
+    calls = []
+    real = df_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", spy)
+    state_root = str(tmp_path / "state")
+    specs = [
+        TableSpec(main_table="t_plain"),
+        TableSpec(main_table="t_bucketed", merge_threshold=2, n_buckets=4),
+        TableSpec(main_table="t_append", engine="MergeTree"),
+    ]
+    res = run_pipeline(
+        spark, specs, pipe_sf_dir, state_root, max_files_per_trigger=1
+    )
+    assert all(n >= 2 for n in res.batches.values()), res.batches
+    assert calls == []
+    monkeypatch.undo()
+
+    con, cdc = _duck(pipe_sf_dir)
+    latest = con.execute(
+        f"WITH cdc AS ({cdc}) SELECT key, ver, op, value FROM cdc "
+        "QUALIFY row_number() OVER (PARTITION BY key ORDER BY ver DESC) = 1"
+    ).df()
+    log = con.execute(f"WITH cdc AS ({cdc}) SELECT * FROM cdc").df()
+    for spec, expected in zip(specs, (latest, latest, log)):
+        got = read_state(spark, spec, state_root).toPandas()
+        r = compare_frames(spec.main_table, got, expected)
+        assert r.ok, str(r)
 
 
 def test_bucketed_spec_rejected_for_other_engines():
@@ -536,15 +590,11 @@ def test_truncate_is_relation_scoped_through_the_pipeline(spark, tmp_path):
         }
     )
     pq.write_table(t, str(spool / f"cdc-{0x100:016x}.parquet"))
-    res = run_pipeline(
-        spark,
-        [TableSpec(main_table="a"), TableSpec(main_table="b")],
-        str(spool),
-        str(tmp_path / "state"),
-        source_format="cdc",
-    )
-    a = {r.key: r.value for r in res.states["a"].collect()}
-    b = {r.key: r.value for r in res.states["b"].collect()}
+    specs = [TableSpec(main_table="a"), TableSpec(main_table="b")]
+    state_root = str(tmp_path / "state")
+    run_pipeline(spark, specs, str(spool), state_root, source_format="cdc")
+    a = {r.key: r.value for r in read_state(spark, specs[0], state_root).collect()}
+    b = {r.key: r.value for r in read_state(spark, specs[1], state_root).collect()}
     assert a == {2: 20.0}   # pre-truncate row gone, survivor kept
     assert b == {1: 99.0}   # untouched by a's truncate
 
@@ -626,7 +676,7 @@ def test_concurrent_tables_match_serial(spark, tmp_path):
         source_format="cdc", max_concurrent_tables=3,
     )
     assert serial.batches == conc.batches
-    for t in ("a", "b", "c"):
-        s = sorted(tuple(r) for r in serial.states[t].collect())
-        c = sorted(tuple(r) for r in conc.states[t].collect())
-        assert s == c, t
+    for spec in specs():
+        s = read_state(spark, spec, str(tmp_path / "s1")).collect()
+        c = read_state(spark, spec, str(tmp_path / "s2")).collect()
+        assert sorted(map(tuple, s)) == sorted(map(tuple, c)), spec.main_table

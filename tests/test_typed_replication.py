@@ -194,7 +194,7 @@ def test_typed_state_schema_is_typed(spark, tmp_path):
         relation_frame,
         update_frame,
     )
-    from pg2ch_spark.pipeline import TableSpec, run_pipeline
+    from pg2ch_spark.pipeline import TableSpec, read_state, run_pipeline
     from pg2ch_spark.sources.clickhouse import encode_row
     from pg2ch_spark.sources.pgoutput import WalDecoder
     from pg2ch_spark.sources.spool import (
@@ -242,14 +242,15 @@ def test_typed_state_schema_is_typed(spark, tmp_path):
         table="acct",
         schema=typed_spool_schema("key", "bigint", _TYPED_COLUMNS),
     ))
-    res = run_pipeline(
+    spec = TableSpec(main_table="acct", columns=_TYPED_COLUMNS)
+    run_pipeline(
         spark,
-        [TableSpec(main_table="acct", columns=_TYPED_COLUMNS)],
+        [spec],
         spool,
         str(tmp_path / "state"),
         source_format="cdc",
     )
-    state = res.states["acct"]
+    state = read_state(spark, spec, str(tmp_path / "state"))
     sch = {f.name: f.dataType for f in state.schema.fields}
     assert sch["price"] == T.DecimalType(18, 2)
     assert sch["odate"] == T.DateType()
@@ -349,7 +350,7 @@ def test_typed_append_log(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
-    from pg2ch_spark.pipeline import TableSpec, run_pipeline
+    from pg2ch_spark.pipeline import TableSpec, read_state, run_pipeline
     from pg2ch_spark.sources.spool import typed_spool_schema
 
     cols = {"price": "decimal(18,2)"}
@@ -367,15 +368,16 @@ def test_typed_append_log(spark, tmp_path):
         ),
         str(spool / f"t-{0x50:016x}.parquet"),
     )
-    res = run_pipeline(
+    spec = TableSpec(main_table="t", engine="MergeTree", key_col="id",
+                     columns=cols)
+    run_pipeline(
         spark,
-        [TableSpec(main_table="t", engine="MergeTree", key_col="id",
-                   columns=cols)],
+        [spec],
         str(spool),
         str(tmp_path / "state"),
         source_format="cdc",
     )
-    log = res.states["t"]
+    log = read_state(spark, spec, str(tmp_path / "state"))
     assert {f.name: f.dataType for f in log.schema.fields}["price"] == (
         T.DecimalType(18, 2)
     )
@@ -404,7 +406,7 @@ def test_typed_bucketed_buffered_state(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
-    from pg2ch_spark.pipeline import TableSpec, run_pipeline
+    from pg2ch_spark.pipeline import TableSpec, read_state, run_pipeline
     from pg2ch_spark.sources.spool import typed_spool_schema
 
     cols = {"price": "decimal(18,2)", "tags": "array<bigint>"}
@@ -426,16 +428,17 @@ def test_typed_bucketed_buffered_state(spark, tmp_path):
             ),
             str(spool / f"t-{lsn:016x}.parquet"),
         )
-    res = run_pipeline(
+    spec = TableSpec(main_table="t", key_col="id", columns=cols,
+                     merge_threshold=2, n_buckets=4)
+    run_pipeline(
         spark,
-        [TableSpec(main_table="t", key_col="id", columns=cols,
-                   merge_threshold=2, n_buckets=4)],
+        [spec],
         str(spool),
         str(tmp_path / "state"),
         source_format="cdc",
         max_files_per_trigger=1,  # two micro-batches, cross-batch merge
     )
-    state = res.states["t"]
+    state = read_state(spark, spec, str(tmp_path / "state"))
     assert {f.name: f.dataType for f in state.schema.fields}["price"] == (
         T.DecimalType(18, 2)
     )
@@ -451,7 +454,7 @@ def test_typed_string_key(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pg2ch_spark.pipeline import TableSpec, run_pipeline
+    from pg2ch_spark.pipeline import TableSpec, read_state, run_pipeline
     from pg2ch_spark.sources.spool import typed_spool_schema
 
     cols = {"price": "decimal(18,2)"}
@@ -469,15 +472,16 @@ def test_typed_string_key(spark, tmp_path):
         ),
         str(spool / f"t-{0x70:016x}.parquet"),
     )
-    res = run_pipeline(
+    spec = TableSpec(main_table="t", key_col="id", key_type="string",
+                     columns=cols)
+    run_pipeline(
         spark,
-        [TableSpec(main_table="t", key_col="id", key_type="string",
-                   columns=cols)],
+        [spec],
         str(spool),
         str(tmp_path / "state"),
         source_format="cdc",
     )
-    [row] = res.states["t"].collect()
+    [row] = read_state(spark, spec, str(tmp_path / "state")).collect()
     assert (row.id, str(row.price), row.op) == ("a0eebc99", "6.25", "U")
 
 
@@ -571,7 +575,7 @@ class TestTypedCollapsing:
         import pyarrow.parquet as pq
         from pyspark.sql import types as T
 
-        from pg2ch_spark.pipeline import TableSpec, run_pipeline
+        from pg2ch_spark.pipeline import TableSpec, read_state, run_pipeline
         from pg2ch_spark.sources.spool import typed_signed_spool_schema
 
         cols = {"price": "decimal(18,2)"}
@@ -597,15 +601,16 @@ class TestTypedCollapsing:
             ),
             str(spool / f"t-{0xA0:016x}.parquet"),
         )
-        res = run_pipeline(
+        spec = TableSpec(main_table="t", engine="CollapsingMergeTree",
+                         key_col="id", columns=cols)
+        run_pipeline(
             spark,
-            [TableSpec(main_table="t", engine="CollapsingMergeTree",
-                       key_col="id", columns=cols)],
+            [spec],
             str(spool),
             str(tmp_path / "state"),
             source_format="cdc",
         )
-        final = res.states["t"]
+        final = read_state(spark, spec, str(tmp_path / "state"))
         assert {f.name: f.dataType for f in final.schema.fields}["price"] == (
             T.DecimalType(18, 2)
         )
