@@ -239,8 +239,9 @@ def cdc_bucketed_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced compaction each, and the answer is the sink's final on-disk
     state. The oracle is the plain latest-per-key SQL — if bucket
     routing, pruning, staged renames, or the buffer tier drop or
-    duplicate any row, the hash gate fails. Crash/replay properties
-    are covered in tests/test_cdc_properties.py."""
+    duplicate any row, the hash gate fails. The derived log holds no
+    TRUNCATE marker, so the batches go to ``sink.merge`` directly.
+    Crash/replay properties are covered in tests/test_cdc_properties.py."""
     import shutil
     import uuid
 

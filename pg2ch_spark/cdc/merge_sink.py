@@ -12,6 +12,9 @@ Locally the state table is a parquet dir rewritten per batch. At scale
 the identical ``merge`` plan targets a transactional sink (Delta/Iceberg
 MERGE INTO, or a ClickHouse JDBC writer feeding a real
 ReplacingMergeTree) — only ``_commit`` changes, not the dataflow.
+
+Every sink's ``merge`` takes post-horizon batches; :func:`merge_batch`
+is the one place a micro-batch's TRUNCATE markers (R10) are applied.
 """
 
 from __future__ import annotations
@@ -23,34 +26,53 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 
-# Sentinel for "horizon not precomputed": run_pipeline computes the
-# per-micro-batch horizon ONCE and threads it to both the local sink
-# and the remote batch hook, so the batch is not aggregate-scanned
-# twice per consumer (ADVICE r6).
-UNSET_HORIZON = object()
-
-
 def truncate_horizon(df: DataFrame | None, ver_col: str):
     """Highest TRUNCATE-marker version in ``df`` (op == 'T'), or None.
 
     pg2ch R10: a truncate wipes everything ordered before it — the
-    marker's version IS the horizon, and filtering rows to
-    ``ver > horizon`` applies it exactly (the last marker subsumes
-    earlier ones; markers sit AT their own horizon so they never
-    persist). One narrow aggregate; replays re-filter idempotently.
-    Shared by every sink family AND the daemon's remote ClickHouse
-    fan-out, so horizon semantics cannot fork per consumer.
+    marker's version IS the horizon, and the rows that survive a
+    micro-batch are exactly those with ``ver > horizon`` (the last
+    marker subsumes earlier ones; markers sit AT their own horizon so
+    they never persist). One job: the marker rows' versions are
+    collected (one row per marker, so the collect stays tiny) and the
+    max is taken on the driver — a global aggregate would cost a
+    shuffle stage more, on every batch, marker or not.
 
-    Ordering contract: the horizon is applied from the INCOMING
-    batch's markers and is not persisted, so convergence relies on
-    Structured Streaming's commit order — replays re-deliver only the
-    last uncommitted epoch, in order (the property the epoch-snapshot
-    machinery in pipeline._CollapsingSink also depends on). A sink fed
-    arbitrarily re-ordered history would need a persisted horizon;
-    argmax-by-version alone is order-free, truncate is not."""
+    Ordering contract: the horizon is read from the INCOMING batch and
+    is not persisted, so a wipe of whatever a sink has stored is only
+    correct because of Structured Streaming's commit order — replays
+    re-deliver only the last uncommitted epoch, in order, so nothing a
+    sink holds when a marker arrives is newer than the marker (the
+    property the epoch-snapshot machinery in pipeline._CollapsingSink
+    also depends on). A sink fed arbitrarily re-ordered history would
+    need a persisted horizon; argmax-by-version alone is order-free,
+    truncate is not."""
     if df is None or "op" not in df.columns:
         return None
-    return df.where(F.col("op") == "T").agg(F.max(ver_col)).collect()[0][0]
+    rows = df.where(F.col("op") == "T").select(ver_col).collect()
+    return max((v for (v,) in rows if v is not None), default=None)
+
+
+def merge_batch(sink, batch_df: DataFrame, epoch_id: int | None = None):
+    """The R10 entry point for one micro-batch: ``(batch', truncated)``.
+
+    With a TRUNCATE marker in ``batch_df``, ``sink.truncate()`` wipes
+    everything the sink has stored and only the rows after the last
+    marker are merged; without one the batch is merged as is. Either
+    way ``batch'`` is what the sink received — the post-horizon delta a
+    remote consumer (the daemon's ClickHouse fan-out) ships after its
+    own TRUNCATE when ``truncated``. Correct only under the ordering
+    contract of :func:`truncate_horizon`: a replay of the marker's
+    epoch re-wipes and relands the same rows. Every sink's ``merge``
+    takes post-horizon batches only; a caller whose events can hold no
+    marker may call ``merge`` directly."""
+    horizon = truncate_horizon(batch_df, sink.ver_col)
+    truncated = horizon is not None
+    if truncated:
+        sink.truncate()
+        batch_df = batch_df.where(F.col(sink.ver_col) > horizon)
+    sink.merge(batch_df, epoch_id)
+    return batch_df, truncated
 
 
 class ReplacingMergeSink:
@@ -86,37 +108,22 @@ class ReplacingMergeSink:
             .drop("_rn")
         )
 
-    def _apply_truncate(
-        self, incoming: DataFrame, current: DataFrame | None,
-        tmax=UNSET_HORIZON,
-    ) -> tuple[object, DataFrame, DataFrame | None]:
-        """(tmax, incoming', current'): the R10 horizon from
-        ``incoming``'s markers applied to both tiers (see
-        :func:`truncate_horizon` for semantics). A caller that already
-        computed the horizon passes it via ``tmax`` (None = "no
-        marker") so the batch is not aggregate-scanned again."""
-        if tmax is UNSET_HORIZON:
-            tmax = truncate_horizon(incoming, self.ver_col)
-        if tmax is not None:
-            incoming = incoming.where(F.col(self.ver_col) > tmax)
-            if current is not None:
-                current = current.where(F.col(self.ver_col) > tmax)
-        return tmax, incoming, current
-
-    def merge(
-        self, batch_df: DataFrame, epoch_id: int | None = None,
-        tmax=UNSET_HORIZON,
-    ) -> None:
+    def merge(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
         """foreachBatch entry point: union existing state + batch, keep the
         max-version row per key, commit atomically. Re-running the same
-        batch (at-least-once replay) is a no-op by construction.
-        TRUNCATE markers in the batch propagate (R10): state and batch
-        rows at or before the last marker's version are dropped.
-        ``tmax``: optionally precomputed horizon (see _apply_truncate)."""
+        batch (at-least-once replay) is a no-op by construction. Takes
+        post-horizon batches: :func:`merge_batch` applies TRUNCATE
+        markers (R10) before calling it."""
         current = self.state()
-        _, batch_df, current = self._apply_truncate(batch_df, current, tmax)
         merged = batch_df if current is None else current.unionByName(batch_df)
         self._commit(self._latest_per_key(merged))
+
+    def truncate(self) -> None:
+        """R10: drop all stored state (the committed table and any
+        crash-window ``.old``, first, so ``state()`` cannot promote it
+        back after a crash between the two removals)."""
+        shutil.rmtree(self.path + ".old", ignore_errors=True)
+        shutil.rmtree(self.path, ignore_errors=True)
 
     def _commit(self, df: DataFrame) -> None:
         """Two-rename commit; any single crash point loses at most the
@@ -191,30 +198,27 @@ class BufferedMergeSink(ReplacingMergeSink):
             f.write(str(n))
         os.replace(tmp, self._counter_path)
 
-    def merge(
-        self, batch_df: DataFrame, epoch_id: int | None = None,
-        tmax=UNSET_HORIZON,
-    ) -> None:
-        """O(batch): append to the buffer tier; merge only at threshold.
-        ``tmax`` is accepted for signature parity but unused — the
-        buffered tiers apply the horizon at FLUSH time over ALL batches
-        buffered since the last merge (a marker in batch 2 must also
-        filter batch 1's already-buffered rows)."""
+    def merge(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
+        """O(batch): append to the buffer tier; merge only at threshold."""
         batch_df.write.mode("append").parquet(self.buffer_path)
         self._batches_buffered += 1
         self._write_counter(self._batches_buffered)
         if self._batches_buffered >= self.merge_every:
             self.flush()
 
+    def truncate(self) -> None:
+        """R10 across both tiers: the buffered batches predate the
+        marker as much as the main table does."""
+        super().truncate()
+        shutil.rmtree(self.buffer_path, ignore_errors=True)
+        self._batches_buffered = 0
+
     def flush(self) -> None:
-        """Replacing-merge the buffer tier into the main state table.
-        TRUNCATE markers buffered since the last flush apply here: the
-        last marker's version filters both tiers (R10)."""
+        """Replacing-merge the buffer tier into the main state table."""
         if not os.path.exists(self.buffer_path):
             return
         buf = self.spark.read.parquet(self.buffer_path)
         current = super().state()
-        _, buf, current = self._apply_truncate(buf, current)
         merged = buf if current is None else current.unionByName(buf)
         self._commit(self._latest_per_key(merged))
         shutil.rmtree(self.buffer_path, ignore_errors=True)
@@ -259,7 +263,8 @@ class BucketedMergeSink(BufferedMergeSink):
     renames are not atomic as a group, but a crash anywhere before the
     buffer truncate re-runs the same flush, and re-merging an
     already-merged delta is a no-op by argmax(ver). Per-bucket ``.old``
-    recovery mirrors ``ReplacingMergeSink.state()``.
+    recovery mirrors ``ReplacingMergeSink.state()``. ``truncate()`` is
+    inherited: every bucket dir (and its ``.old``) lives under ``path``.
     """
 
     def __init__(
@@ -300,30 +305,11 @@ class BucketedMergeSink(BufferedMergeSink):
         if not os.path.exists(self.buffer_path):
             return
         buf = self.spark.read.parquet(self.buffer_path)
-        # ONE probe job computes the R10 truncate horizon AND the
-        # delta's touched-bucket set (r8: previously two driver jobs —
-        # a horizon aggregate plus a distinct-buckets collect; both are
-        # aggregates of the same buffer scan, and latest-per-key keeps
-        # every key, so the buffer's bucket set IS the delta's).
-        # collect_set is bounded by n_buckets ints — driver-bounded.
-        aggs = [F.collect_set(self._bucket_expr()).alias("_bs")]
-        if "op" in buf.columns:
-            aggs.append(
-                F.max(
-                    F.when(F.col("op") == "T", F.col(self.ver_col))
-                ).alias("_t")
-            )
-        probe = buf.agg(*aggs).collect()[0]
-        tmax = probe["_t"] if "op" in buf.columns else None
-        if tmax is not None:
-            # a truncate touches EVERY bucket: the O(touched) pruning
-            # rightly escalates to a full-state pass for the one
-            # operation whose semantics are "all state before me"
-            # (current is filtered below, after the touched-bucket read)
-            buf = buf.where(F.col(self.ver_col) > tmax)
-            touched = list(range(self.n_buckets))
-        else:
-            touched = sorted(probe["_bs"])
+        # latest-per-key keeps every key, so the buffer's bucket set IS
+        # the delta's; collect_set is bounded by n_buckets ints
+        touched = sorted(
+            buf.agg(F.collect_set(self._bucket_expr())).collect()[0][0]
+        )
         delta = self._bucket(self._latest_per_key(buf))
         existing = [
             d for d in (self._recover_bucket(b) for b in touched) if d is not None
@@ -331,8 +317,6 @@ class BucketedMergeSink(BufferedMergeSink):
         merged = delta
         if existing:
             current = self._bucket(self.spark.read.parquet(*existing))
-            if tmax is not None:
-                current = current.where(F.col(self.ver_col) > tmax)
             merged = current.unionByName(delta)
         staging = self.path + ".staging"
         shutil.rmtree(staging, ignore_errors=True)
@@ -347,15 +331,6 @@ class BucketedMergeSink(BufferedMergeSink):
         for b in touched:
             src = os.path.join(staging, f"_b={b}")
             if not os.path.exists(src):
-                if tmax is not None:
-                    # truncate wiped this bucket entirely: remove it
-                    # (idempotent on replay — the buffer re-flushes
-                    # until its own truncate below commits)
-                    bdir = self._bucket_dir(b)
-                    shutil.rmtree(bdir + ".old", ignore_errors=True)
-                    if os.path.exists(bdir):
-                        shutil.rmtree(bdir, ignore_errors=True)
-                        self.buckets_rewritten += 1
                 continue  # defensive: argmax keeps ≥1 row per delta key
             bdir = self._bucket_dir(b)
             old = bdir + ".old"

@@ -170,22 +170,18 @@ def run_daemon(
 
     batch_hook = None
     if cfg.clickhouse is not None:
-        import pyspark.sql.functions as F
-
         from pg2ch_spark.sources.clickhouse import clickhouse_sink, truncate_table
 
         ch_http = cfg.clickhouse.http_options()
 
-        def batch_hook(spec, batch_df, tmax, epoch_id) -> None:
+        def batch_hook(spec, batch_df, truncated, epoch_id) -> None:
             table = f"{cfg.clickhouse.database}.{spec.main_table}"
-            # R10 remotely: pg2ch TRUNCATEs the CH table; markers are
-            # commands, never data rows (a \\N key would either fail a
-            # non-Nullable column or linger as a ghost row forever).
-            # tmax arrives precomputed from the pipeline (one horizon
-            # aggregate per micro-batch, shared with the local sink).
-            if tmax is not None:
+            # R10 remotely: pg2ch TRUNCATEs the CH table. The batch
+            # arrives already cut to the rows after the marker (markers
+            # are commands, never data rows: a \\N key would either fail
+            # a non-Nullable column or linger as a ghost row forever).
+            if truncated:
                 truncate_table(cfg.clickhouse.endpoint, table, ch_http)
-                batch_df = batch_df.where(F.col(spec.ver_col) > tmax)
             # Real checkpointed epoch id, NOT a constant: the dedup
             # token is md5(epoch:partition: | body) and two different
             # micro-batches CAN serialize byte-identical bodies — a
@@ -203,6 +199,7 @@ def run_daemon(
     # build_sink over the same root flushes the persisted buffer.
     import time
 
+    from pg2ch_spark.cdc.merge_sink import BufferedMergeSink
     from pg2ch_spark.pipeline import build_sink
 
     timer_mode = cfg.inactivity_merge_timeout_s is not None
@@ -215,9 +212,9 @@ def run_daemon(
             if now - last_activity[spec.main_table] < cfg.inactivity_merge_timeout_s:
                 continue
             sink = build_sink(spark, spec, cfg.state_root)
-            if getattr(sink, "flush", None) is None:
+            if not isinstance(sink, BufferedMergeSink):
                 continue
-            if not os.path.exists(getattr(sink, "buffer_path", "")):
+            if not os.path.exists(sink.buffer_path):
                 continue  # nothing buffered — quiet AND merged
             sink.flush()
             merged.append(spec.main_table)

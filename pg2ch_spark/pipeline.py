@@ -32,10 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pg2ch_spark import catalog
 from pg2ch_spark.cdc.merge_sink import (
-    UNSET_HORIZON,
     BucketedMergeSink,
     BufferedMergeSink,
     ReplacingMergeSink,
+    merge_batch,
 )
 
 ENGINES = ("ReplacingMergeTree", "CollapsingMergeTree", "MergeTree")
@@ -133,29 +133,15 @@ class _AppendSink:
         self.spark, self.path = spark, path
         self.key_col, self.sign_col, self.ver_col = key_col, sign_col, ver_col
 
-    def _apply_truncate_wipe(self, batch_df: DataFrame, tmax=UNSET_HORIZON) -> DataFrame:
-        """R10 for log-shaped sinks: ClickHouse TRUNCATE on a MergeTree
-        wipes the table, so a marker drops every already-landed epoch
-        and filters this batch to the rows after the horizon. Replay of
-        the same epoch re-wipes (already empty) and relands the same
-        filtered rows — idempotent. ``tmax``: precomputed horizon
-        (None = "computed, no marker"); UNSET_HORIZON computes here."""
-        from pg2ch_spark.cdc.merge_sink import truncate_horizon
-
-        if tmax is UNSET_HORIZON:
-            tmax = truncate_horizon(batch_df, self.ver_col)
-        if tmax is None:
-            return batch_df
-        shutil.rmtree(self.path, ignore_errors=True)
-        return batch_df.where(F.col(self.ver_col) > tmax)
-
-    def merge(
-        self, batch_df: DataFrame, epoch_id: int | None = None,
-        tmax=UNSET_HORIZON,
-    ) -> None:
-        batch_df = self._apply_truncate_wipe(batch_df, tmax)
+    def merge(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
+        """Land one post-horizon batch (see merge_sink.merge_batch)."""
         out = os.path.join(self.path, f"epoch={int(epoch_id or 0)}")
         batch_df.write.mode("overwrite").parquet(out)
+
+    def truncate(self) -> None:
+        """R10: ClickHouse TRUNCATE on a MergeTree wipes the table, so
+        every already-landed epoch goes."""
+        shutil.rmtree(self.path, ignore_errors=True)
 
     def state(self) -> DataFrame | None:
         if not os.path.exists(self.path):
@@ -219,29 +205,23 @@ class _CollapsingSink(_AppendSink):
             return None
         return self.spark.read.parquet(self._snapshot_path(prior[-1]))
 
-    def merge(
-        self, batch_df: DataFrame, epoch_id: int | None = None,
-        tmax=UNSET_HORIZON,
-    ) -> None:
-        from pyspark.sql import Window
+    def truncate(self) -> None:
+        """R10 wipes the signed log AND the per-key side state — after a
+        truncate the table is empty, so the first change per key
+        afterwards must see NO carry (its −1 sibling would resurrect a
+        wiped value). A replay of the truncate epoch re-wipes the
+        snapshot its first application wrote and rebuilds it
+        identically."""
+        super().truncate()
+        shutil.rmtree(self.prev_root, ignore_errors=True)
 
-        from pg2ch_spark.cdc.merge_sink import truncate_horizon
+    def merge(self, batch_df: DataFrame, epoch_id: int | None = None) -> None:
+        from pyspark.sql import Window
 
         k = self.key_col
         v = self.ver_col
         epoch = int(epoch_id or 0)
         w = Window.partitionBy(k).orderBy(v)
-        # R10: a marker wipes the signed log AND the per-key side state
-        # — after a truncate the table is empty, so the first change
-        # per key afterwards must see NO carry (its −1 sibling would
-        # resurrect a wiped value). Replays rebuild identically: the
-        # snapshots are gone on first application and stay gone.
-        if tmax is UNSET_HORIZON:
-            tmax = truncate_horizon(batch_df, v)
-        if tmax is not None:
-            shutil.rmtree(self.path, ignore_errors=True)
-            shutil.rmtree(self.prev_root, ignore_errors=True)
-            batch_df = batch_df.where(F.col(v) > tmax)
         prev = self._prev(epoch)
         b = batch_df.withColumn("_lag", F.lag("value").over(w))
         if prev is not None:
@@ -250,6 +230,7 @@ class _CollapsingSink(_AppendSink):
             )
         else:
             b = b.withColumn("_carry", F.lit(None).cast("double"))
+        # two actions read b (the epoch write and the snapshot write)
         b = b.withColumn("prev_value", F.coalesce("_lag", "_carry")).localCheckpoint(
             eager=True
         )
@@ -275,7 +256,6 @@ class _CollapsingSink(_AppendSink):
             merged.withColumn("_rn", F.row_number().over(w2))
             .where(F.col("_rn") == 1)
             .drop("_rn")
-            .localCheckpoint(eager=True)
         )
         snap = self._snapshot_path(epoch)
         tmp = snap + ".staging"
@@ -426,17 +406,21 @@ def run_pipeline(
     shape `sources.spool.spool_transactions` lands from the live
     walsender client, closing the R2→R5 chain end-to-end.
 
-    ``batch_hook(spec, batch_df, tmax, epoch_id)`` runs AFTER each
+    Each micro-batch goes through `merge_sink.merge_batch`, the one
+    place TRUNCATE markers (R10) apply: a marker wipes the sink and
+    only the rows after the last marker are merged.
+
+    ``batch_hook(spec, batch_df, truncated, epoch_id)`` runs AFTER each
     micro-batch's local merge commits — the R12 fan-out point (the
-    daemon posts each batch delta to ClickHouse here). ``tmax`` is the
-    micro-batch's truncate horizon (None = no marker), computed ONCE
-    here and shared with the local sink so the batch is not
-    aggregate-scanned per consumer; ``epoch_id`` is the checkpointed
-    micro-batch id, which remote sinks must fold into their dedup
-    token (two epochs can serialize byte-identical bodies). It sees
-    the DELTA,
-    not the state: at 100 TB re-shipping full state per pass is wrong,
-    and replayed deltas converge on the remote merge engine exactly as
+    daemon posts each batch delta to ClickHouse here). ``batch_df`` is
+    the post-horizon batch the sink merged (no marker rows, no row at
+    or before the last marker's version); ``truncated`` says the batch
+    held a marker, so the remote table must be truncated before the
+    rows land; ``epoch_id`` is the checkpointed micro-batch id, which
+    remote sinks must fold into their dedup token (two epochs can
+    serialize byte-identical bodies). It sees the DELTA, not the
+    state: at 100 TB re-shipping full state per pass is wrong, and
+    replayed deltas converge on the remote merge engine exactly as
     they do on the local sink.
 
     ``max_concurrent_tables``: >1 runs that many tables' catch-up
@@ -457,7 +441,6 @@ def run_pipeline(
     from pg2ch_spark.streaming.runner import (
         _few_state_partitions,
         _stream_source_managed,
-        scratch_dir,
     )
 
     if source_format not in ("events", "cdc"):
@@ -501,24 +484,10 @@ def run_pipeline(
                 spec_schema = typed_spool_ddl(
                     spec.key_col, spec.key_type, spec.columns
                 )
-        if max_files_per_trigger is None:
-            src, _src_dir = _stream_source_managed(spark, spec_path, spec_schema)
-        else:
-            # multi-batch replay: one file per micro-batch (the shape a
-            # continuous daemon sees), exercising cross-batch carry
-            src_path = spec_path
-            _src_dir = None
-            if os.path.isfile(src_path):
-                _src_dir = scratch_dir("pg2ch_pipe_src_")
-                os.symlink(
-                    src_path, os.path.join(_src_dir, os.path.basename(src_path))
-                )
-                src_path = _src_dir
-            src = (
-                spark.readStream.schema(spec_schema)
-                .option("maxFilesPerTrigger", max_files_per_trigger)
-                .parquet(src_path)
-            )
+        src, _src_dir = _stream_source_managed(
+            spark, spec_path, spec_schema,
+            max_files_per_trigger=max_files_per_trigger,
+        )
         if source_format == "cdc":
             # R4 route: this spec consumes only its own relation's rows
             normalized = src.where(
@@ -545,27 +514,11 @@ def run_pipeline(
 
         n_batches = 0
 
-        # The horizon aggregate is computed at most ONCE per micro-batch
-        # and shared by every consumer that wants it. Buffered/Bucketed
-        # sinks apply horizons at FLUSH time over all buffered batches,
-        # so with no remote hook their hot path stays a pure O(batch)
-        # append — zero aggregate scans.
-        sink_needs_tmax = not isinstance(sink, BufferedMergeSink)
-
-        def sink_batch(
-            batch_df: DataFrame, epoch_id: int, _sink=sink, _spec=spec,
-            _needs=sink_needs_tmax,
-        ) -> None:
+        def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
             nonlocal n_batches
-            from pg2ch_spark.cdc.merge_sink import truncate_horizon
-
-            if _needs or batch_hook is not None:
-                tmax = truncate_horizon(batch_df, _spec.ver_col)
-            else:
-                tmax = UNSET_HORIZON  # nobody consumes it this batch
-            _sink.merge(batch_df, epoch_id, tmax=tmax)
+            batch_df, truncated = merge_batch(sink, batch_df, epoch_id)
             if batch_hook is not None:
-                batch_hook(_spec, batch_df, tmax, epoch_id)
+                batch_hook(spec, batch_df, truncated, epoch_id)
             n_batches += 1
 
         try:

@@ -265,7 +265,9 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-batch MERGE into a keyed state table via foreachBatch —
     the full pg2ch buffer→flush→merge path (R8/R9/R12). Final state is
     identical to ``cdc_replacing_final``: the merge is idempotent under
-    replay, which is the whole convergence argument (SURVEY §1.1)."""
+    replay, which is the whole convergence argument (SURVEY §1.1).
+    Derived events hold no TRUNCATE marker, so ``sink.merge`` is the
+    foreachBatch function itself, without ``merge_batch``."""
     from pg2ch_spark.cdc.merge_sink import ReplacingMergeSink
     from pg2ch_spark.streaming.runner import scratch_dir
 

@@ -182,20 +182,28 @@ def _stream_source(spark: SparkSession, path: str, schema: StructType) -> DataFr
 
 
 def _stream_source_managed(
-    spark: SparkSession, path: str, schema: StructType
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    max_files_per_trigger: int | None = None,
 ) -> tuple[DataFrame, str | None]:
     """Stream source plus the scratch dir backing it (None if the path
     was already a directory) so callers can reclaim it after the query
     terminates. The file stream source requires a directory; the
     fixtures are single parquet files, so expose one through a temp dir
     of symlinks (in production this is a real directory of parts / a
-    Kafka topic)."""
+    Kafka topic). ``max_files_per_trigger`` caps the files per
+    micro-batch (1 = one file per batch, the shape a continuous daemon
+    sees)."""
     d = None
     if os.path.isfile(path):
         d = scratch_dir("pg2ch_streamsrc_")
         os.symlink(path, os.path.join(d, os.path.basename(path)))
         path = d
-    return spark.readStream.schema(schema).parquet(path), d
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path), d
 
 
 def replay_available_now(

@@ -236,6 +236,7 @@ def test_random_op_streams_with_truncates_converge(spark):
         BucketedMergeSink,
         BufferedMergeSink,
         ReplacingMergeSink,
+        merge_batch,
     )
 
     for seed in (3, 17, 44):
@@ -274,9 +275,9 @@ def test_random_op_streams_with_truncates_converge(spark):
         for i, b in enumerate(batches):
             df = spark.createDataFrame(b, "key bigint, ver bigint, op string, value double")
             for s in sinks:
-                s.merge(df)
+                merge_batch(s, df)
                 if i == replay_at:
-                    s.merge(df)  # at-least-once re-delivery
+                    merge_batch(s, df)  # at-least-once re-delivery
         for s in sinks:
             got = {(r.key, r.ver, r.op, r.value) for r in s.state().collect()}
             assert got == expected, (seed, type(s).__name__)

@@ -198,6 +198,23 @@ def test_spec_mapping_rejects_unknown_keys():
         TableSpec(main_table="t", engine="SummingMergeTree2")
 
 
+@pytest.fixture
+def checkpoint_calls(spark, monkeypatch):
+    """Records every localCheckpoint call. Patches the session's
+    concrete DataFrame class: in PySpark 4.1 patching
+    `pyspark.sql.DataFrame` catches nothing."""
+    df_cls = type(spark.range(1))
+    calls = []
+    real = df_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", spy)
+    return calls
+
+
 @pytest.mark.parametrize("seed", [7, 21, 99])
 def test_collapsing_carry_equals_global_expansion(spark, tmp_path, seed):
     """Property: for a random op log split into random batches, the
@@ -333,6 +350,23 @@ def test_collapsing_snapshot_staging_crash_recovers(spark, tmp_path):
     assert not os.path.exists(stale)
 
 
+def test_collapsing_merge_checkpoints_once(spark, tmp_path, checkpoint_calls):
+    """One eager localCheckpoint per `_CollapsingSink.merge`: the
+    expanded batch, read by both the epoch write and the snapshot
+    write. The new carry snapshot has one reader and is not pinned."""
+    from pg2ch_spark.pipeline import _CollapsingSink
+
+    sink = _CollapsingSink(spark, str(tmp_path / "clog"), "key", "sign")
+    batches = [
+        [(1, 1, "I", 10.0), (2, 2, "I", 20.0)],
+        [(1, 3, "U", 11.0), (2, 4, "D", 20.0)],
+    ]
+    for epoch, rows in enumerate(batches):
+        sink.merge(_cdc_batch(spark, rows), epoch_id=epoch)
+        assert len(checkpoint_calls) == epoch + 1
+    assert {r.key: r.net for r in sink.final().collect()} == {1: 1}
+
+
 def test_append_state_has_no_synthetic_epoch_column(pipe_result):
     cols = set(_state(pipe_result, "t_append").columns)
     assert cols == {"key", "ver", "op", "value"}
@@ -451,21 +485,12 @@ def test_bucketed_spec_equals_single_tier(spark, pipe_sf_dir, tmp_path_factory):
 
 
 def test_pass_reads_no_state_and_checkpoints_nothing(
-    spark, pipe_sf_dir, tmp_path, monkeypatch
+    spark, pipe_sf_dir, tmp_path, checkpoint_calls, monkeypatch
 ):
     """A pass only flushes deltas, as pg2ch's daemon does: no table is
     read back or localCheckpointed on the way out (the derived-log
-    collapsing sink is left out — its merge checkpoints its own carry).
-    The state is still all there for `read_state` to find."""
-    df_cls = type(spark.range(1))  # the session's concrete DataFrame
-    calls = []
-    real = df_cls.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        calls.append(args)
-        return real(self, *args, **kwargs)
-
-    monkeypatch.setattr(df_cls, "localCheckpoint", spy)
+    collapsing sink is left out — its merge checkpoints its expanded
+    batch). The state is still all there for `read_state` to find."""
     state_root = str(tmp_path / "state")
     specs = [
         TableSpec(main_table="t_plain"),
@@ -476,7 +501,7 @@ def test_pass_reads_no_state_and_checkpoints_nothing(
         spark, specs, pipe_sf_dir, state_root, max_files_per_trigger=1
     )
     assert all(n >= 2 for n in res.batches.values()), res.batches
-    assert calls == []
+    assert checkpoint_calls == []
     monkeypatch.undo()
 
     con, cdc = _duck(pipe_sf_dir)
@@ -498,10 +523,9 @@ def test_bucketed_spec_rejected_for_other_engines():
 
 # ---------------------------------------------------------------------------
 # TRUNCATE propagation (R10) through the Replacing sink family: a 'T'
-# marker wipes all state ordered before its version — in the single-
-# tier merge, across the buffer tier, and across EVERY bucket of the
-# bucket-pruned sink (the one operation that rightly escalates the
-# O(touched) rewrite to a full-state pass).
+# marker, applied by merge_sink.merge_batch, wipes all state ordered
+# before its version — in the single-tier merge, across the buffer
+# tier, and across EVERY bucket of the bucket-pruned sink.
 
 
 def _cdc_batch(spark, rows):
@@ -510,21 +534,25 @@ def _cdc_batch(spark, rows):
 
 @pytest.mark.parametrize("n_buckets", [0, 4])
 def test_truncate_wipes_prior_state(spark, tmp_path, n_buckets):
-    from pg2ch_spark.cdc.merge_sink import BucketedMergeSink, ReplacingMergeSink
+    from pg2ch_spark.cdc.merge_sink import (
+        BucketedMergeSink,
+        ReplacingMergeSink,
+        merge_batch,
+    )
 
     path = str(tmp_path / f"st{n_buckets}")
     if n_buckets:
         sink = BucketedMergeSink(spark, path, "key", "ver", merge_every=1, n_buckets=n_buckets)
     else:
         sink = ReplacingMergeSink(spark, path, "key", "ver")
-    sink.merge(_cdc_batch(spark, [(1, 1, "I", 10.0), (2, 2, "I", 20.0)]))
+    merge_batch(sink, _cdc_batch(spark, [(1, 1, "I", 10.0), (2, 2, "I", 20.0)]))
     # truncate at ver 3, then a survivor AFTER it in the same batch
     truncate_batch = [(None, 3, "T", None), (3, 4, "I", 30.0)]
-    sink.merge(_cdc_batch(spark, truncate_batch))
+    merge_batch(sink, _cdc_batch(spark, truncate_batch))
     got = {r.key: r.value for r in sink.state().collect()}
     assert got == {3: 30.0}
     # at-least-once replay of the truncate batch is a no-op
-    sink.merge(_cdc_batch(spark, truncate_batch))
+    merge_batch(sink, _cdc_batch(spark, truncate_batch))
     assert {r.key: r.value for r in sink.state().collect()} == {3: 30.0}
 
 
@@ -532,13 +560,13 @@ def test_truncate_only_batch_empties_bucketed_state(spark, tmp_path):
     """Every bucket dir must GO AWAY, not linger as stale state."""
     import os
 
-    from pg2ch_spark.cdc.merge_sink import BucketedMergeSink
+    from pg2ch_spark.cdc.merge_sink import BucketedMergeSink, merge_batch
 
     path = str(tmp_path / "stb")
     sink = BucketedMergeSink(spark, path, "key", "ver", merge_every=1, n_buckets=4)
-    sink.merge(_cdc_batch(spark, [(k, k, "I", float(k)) for k in range(1, 9)]))
+    merge_batch(sink, _cdc_batch(spark, [(k, k, "I", float(k)) for k in range(1, 9)]))
     assert sink.state().count() == 8
-    sink.merge(_cdc_batch(spark, [(None, 100, "T", None)]))
+    merge_batch(sink, _cdc_batch(spark, [(None, 100, "T", None)]))
     state = sink.state()
     assert state is None or state.count() == 0
     assert not any(
@@ -549,15 +577,15 @@ def test_truncate_only_batch_empties_bucketed_state(spark, tmp_path):
 
 
 def test_truncate_across_buffer_tier(spark, tmp_path):
-    """Markers buffered between flushes apply at flush time: rows
-    before the LAST marker drop even when they arrived in earlier
-    buffered batches; later markers subsume earlier ones."""
-    from pg2ch_spark.cdc.merge_sink import BufferedMergeSink
+    """A marker wipes both tiers: rows before the LAST marker drop
+    even when they arrived in earlier, still-buffered batches; later
+    markers subsume earlier ones."""
+    from pg2ch_spark.cdc.merge_sink import BufferedMergeSink, merge_batch
 
     sink = BufferedMergeSink(spark, str(tmp_path / "buf"), "key", "ver", merge_every=10)
-    sink.merge(_cdc_batch(spark, [(1, 1, "I", 10.0)]))
-    sink.merge(_cdc_batch(spark, [(None, 2, "T", None), (2, 3, "I", 20.0)]))
-    sink.merge(_cdc_batch(spark, [(None, 4, "T", None), (3, 5, "I", 30.0)]))
+    merge_batch(sink, _cdc_batch(spark, [(1, 1, "I", 10.0)]))
+    merge_batch(sink, _cdc_batch(spark, [(None, 2, "T", None), (2, 3, "I", 20.0)]))
+    merge_batch(sink, _cdc_batch(spark, [(None, 4, "T", None), (3, 5, "I", 30.0)]))
     got = {r.key: r.value for r in sink.state().collect()}  # state() flushes
     assert got == {3: 30.0}
 
@@ -604,6 +632,7 @@ def test_truncate_wipes_collapsing_and_append_sinks(spark, tmp_path):
     carry side state) and the append log are wiped, not left carrying
     pre-truncate rows — and the first post-truncate change per key
     sees NO carry."""
+    from pg2ch_spark.cdc.merge_sink import merge_batch
     from pg2ch_spark.pipeline import _AppendSink, _CollapsingSink
 
     batches = [
@@ -615,8 +644,8 @@ def test_truncate_wipes_collapsing_and_append_sinks(spark, tmp_path):
     cs = _CollapsingSink(spark, str(tmp_path / "cs"), "key", "sign")
     for e, rows in enumerate(batches):
         df = _cdc_batch(spark, rows)
-        ap.merge(df, epoch_id=e)
-        cs.merge(df, epoch_id=e)
+        merge_batch(ap, df, epoch_id=e)
+        merge_batch(cs, df, epoch_id=e)
 
     ap_rows = [(r.key, r.op) for r in ap.final().collect()]
     assert ap_rows == [(1, "I")]  # only the post-truncate insert
@@ -629,10 +658,111 @@ def test_truncate_wipes_collapsing_and_append_sinks(spark, tmp_path):
     assert log == [(1, 1, 30.0)]
 
     # at-least-once replay of the truncate epoch converges identically
-    ap.merge(_cdc_batch(spark, batches[1]), epoch_id=1)
-    cs.merge(_cdc_batch(spark, batches[1]), epoch_id=1)
+    merge_batch(ap, _cdc_batch(spark, batches[1]), epoch_id=1)
+    merge_batch(cs, _cdc_batch(spark, batches[1]), epoch_id=1)
     assert [(r.key, r.op) for r in ap.final().collect()] == [(1, "I")]
     assert {r.key: r.net for r in cs.final().collect()} == {1: 1}
+
+
+@pytest.mark.parametrize("with_marker", [False, True])
+def test_truncate_horizon_is_one_job(spark, with_marker):
+    """The horizon read runs on every micro-batch, marker or not, so it
+    is one collect of the marker rows, not a two-stage aggregate."""
+    from pg2ch_spark.cdc.merge_sink import truncate_horizon
+
+    rows = [(1, 1, "I", 10.0), (2, 5, "U", 20.0), (3, 6, "I", 30.0)]
+    if with_marker:
+        rows += [(None, 2, "T", None), (None, 4, "T", None)]
+    df = _cdc_batch(spark, rows)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(dag.nextJobId())
+    horizon = truncate_horizon(df, "ver")
+    assert int(dag.nextJobId()) - before == 1
+    assert horizon == (4 if with_marker else None)
+
+
+def test_batch_hook_sees_post_horizon_batches(spark, tmp_path):
+    """The hook contract: every engine's hook call gets the batch the
+    sink merged — no marker row, no row at or before the marker — and
+    ``truncated`` is True exactly for the marker's epoch. The state is
+    the rows after the last marker, per engine."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = [
+        [(1, 1, "I", 10.0), (2, 2, "I", 20.0), (3, 3, "I", 30.0), (1, 4, "U", 11.0)],
+        [
+            (2, 5, "U", 21.0), (4, 6, "I", 40.0), (None, 7, "T", None),
+            (1, 8, "I", 12.0), (2, 9, "I", 22.0), (1, 10, "U", 13.0),
+        ],
+        [(3, 11, "I", 31.0), (2, 12, "D", None), (4, 13, "I", 41.0), (3, 14, "U", 32.0)],
+    ]
+    marker = 7
+    specs = [
+        TableSpec(main_table="t_plain"),
+        TableSpec(main_table="t_bucketed", merge_threshold=2, n_buckets=4),
+        TableSpec(main_table="t_collapsing", engine="CollapsingMergeTree"),
+        TableSpec(main_table="t_append", engine="MergeTree"),
+    ]
+    spool = tmp_path / "spool"
+    os.makedirs(spool)
+    for i, rows in enumerate(files):
+        rows = [(s.main_table, *r) for s in specs for r in rows]
+        cols = list(zip(*rows))
+        path = str(spool / f"cdc-{i:016x}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "table": pa.array(cols[0], pa.string()),
+                    "key": pa.array(cols[1], pa.int64()),
+                    "ver": pa.array(cols[2], pa.int64()),
+                    "op": pa.array(cols[3], pa.string()),
+                    "value": pa.array(cols[4], pa.float64()),
+                }
+            ),
+            path,
+        )
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))  # file order
+
+    seen = []
+
+    def hook(spec, batch_df, truncated, epoch_id):
+        rows = [(r.ver, r.op) for r in batch_df.collect()]
+        seen.append((spec.main_table, epoch_id, truncated, rows))
+
+    state_root = str(tmp_path / "state")
+    res = run_pipeline(
+        spark, specs, str(spool), state_root,
+        max_files_per_trigger=1, source_format="cdc", batch_hook=hook,
+    )
+    assert res.batches == {s.main_table: 3 for s in specs}
+    for spec in specs:
+        calls = sorted(c[1:] for c in seen if c[0] == spec.main_table)
+        assert [(e, t) for e, t, _ in calls] == [(0, False), (1, True), (2, False)]
+        for epoch, _, rows in calls:
+            assert all(op != "T" for _, op in rows), (spec.main_table, rows)
+            if epoch >= 1:
+                assert rows and all(v > marker for v, _ in rows), rows
+
+    after = [r for rows in files for r in rows if r[1] > marker]
+    latest = {}
+    for r in after:
+        latest[r[0]] = r
+    net = {}
+    for k, _, op, _ in after:
+        net[k] = net.get(k, 0) + {"I": 1, "D": -1}.get(op, 0)
+
+    def got(spec):
+        return read_state(spark, spec, state_root).collect()
+
+    for spec in specs[:2]:
+        assert {tuple(r) for r in got(spec)} == set(latest.values())
+    assert {r.key: r.net for r in got(specs[2])} == {
+        k: n for k, n in net.items() if n > 0
+    }
+    assert sorted(
+        (r.key, r.ver, r.op, r.value) for r in got(specs[3])
+    ) == sorted(after)
 
 
 def test_concurrent_tables_match_serial(spark, tmp_path):
