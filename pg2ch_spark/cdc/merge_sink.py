@@ -15,15 +15,58 @@ ReplacingMergeTree) — only ``_commit`` changes, not the dataflow.
 
 Every sink's ``merge`` takes post-horizon batches; :func:`merge_batch`
 is the one place a micro-batch's TRUNCATE markers (R10) are applied.
+Sink state is read through :func:`read_parquet`, which launches no
+Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-listing filter: `_`/`.` names are metadata (the
+    `_SUCCESS` marker, `.crc` files), except `k=v` partition dirs."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
+def _first_part_file(path: str) -> str | None:
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if _listed(d))
+        for f in sorted(files):
+            if _listed(f):
+                return os.path.join(root, f)
+    return None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job.
+
+    Inference runs a one-task Spark job to read one file footer; on a
+    sink that reads its state on every micro-batch that job is pure
+    fixed cost. The same footer holds the schema Spark wrote, so it is
+    read here on the driver (one part file, pyarrow) and handed to the
+    reader. Files Spark did not write carry no such key and fall back
+    to the inferring read."""
+    import pyarrow.parquet as pq
+
+    part = next(
+        (f for f in map(_first_part_file, paths) if f is not None), None
+    )
+    meta = (pq.read_schema(part).metadata or {}) if part is not None else {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(*paths)
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def truncate_horizon(df: DataFrame | None, ver_col: str):
@@ -97,11 +140,14 @@ class ReplacingMergeSink:
                 os.rename(old, self.path)
             else:
                 return None
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path)
 
-    def _latest_per_key(self, df: DataFrame) -> DataFrame:
-        """ReplacingMergeTree semantics: argmax(ver) row per key."""
-        w = Window.partitionBy(self.key_col).orderBy(F.col(self.ver_col).desc())
+    def _latest_per_key(self, df: DataFrame, *within: str) -> DataFrame:
+        """ReplacingMergeTree semantics: argmax(ver) row per key (per
+        ``within`` columns first, when given)."""
+        w = Window.partitionBy(*within, self.key_col).orderBy(
+            F.col(self.ver_col).desc()
+        )
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
@@ -217,7 +263,7 @@ class BufferedMergeSink(ReplacingMergeSink):
         """Replacing-merge the buffer tier into the main state table."""
         if not os.path.exists(self.buffer_path):
             return
-        buf = self.spark.read.parquet(self.buffer_path)
+        buf = read_parquet(self.spark, self.buffer_path)
         current = super().state()
         merged = buf if current is None else current.unionByName(buf)
         self._commit(self._latest_per_key(merged))
@@ -248,12 +294,14 @@ class BucketedMergeSink(BufferedMergeSink):
     names, so no partition-discovery column leaks into the schema), and
     a flush
 
-    1. collapses the buffer to its argmax-per-key delta,
-    2. lists the delta's DISTINCT buckets (≤ n_buckets ints — the only
+    1. lists the buffer's DISTINCT buckets (≤ n_buckets ints — the only
        driver-side data, bounded by construction),
-    3. replacing-merges delta + existing state FOR THOSE BUCKETS ONLY
-       in one Spark job (staging dir partitioned by bucket),
-    4. promotes each touched bucket with the two-rename protocol.
+    2. replacing-merges the raw buffer + existing state FOR THOSE
+       BUCKETS ONLY with one shuffle: hash-partitioned on the bucket,
+       argmax per (bucket, key) — that partitioning and ordering also
+       serve the bucket-partitioned staging write, which adds no
+       shuffle or sort of its own,
+    3. promotes each touched bucket with the two-rename protocol.
 
     Untouched buckets are never read, never written. At scale
     n_buckets is sized so a bucket ≈ a compaction unit (e.g. 4096
@@ -304,25 +352,22 @@ class BucketedMergeSink(BufferedMergeSink):
     def flush(self) -> None:
         if not os.path.exists(self.buffer_path):
             return
-        buf = self.spark.read.parquet(self.buffer_path)
-        # latest-per-key keeps every key, so the buffer's bucket set IS
-        # the delta's; collect_set is bounded by n_buckets ints
+        buf = read_parquet(self.spark, self.buffer_path)
+        # collect_set is bounded by n_buckets ints
         touched = sorted(
             buf.agg(F.collect_set(self._bucket_expr())).collect()[0][0]
         )
-        delta = self._bucket(self._latest_per_key(buf))
         existing = [
             d for d in (self._recover_bucket(b) for b in touched) if d is not None
         ]
-        merged = delta
+        merged = self._bucket(buf)
         if existing:
-            current = self._bucket(self.spark.read.parquet(*existing))
-            merged = current.unionByName(delta)
+            current = self._bucket(read_parquet(self.spark, *existing))
+            merged = current.unionByName(merged)
         staging = self.path + ".staging"
         shutil.rmtree(staging, ignore_errors=True)
         (
-            self._latest_per_key(merged)
-            .repartition(max(len(touched), 1), "_b")
+            self._latest_per_key(merged.repartition(max(len(touched), 1), "_b"), "_b")
             .write.partitionBy("_b")
             .mode("overwrite")
             .parquet(staging)
@@ -354,4 +399,4 @@ class BucketedMergeSink(BufferedMergeSink):
         ]
         if not dirs:
             return None
-        return self.spark.read.parquet(*dirs)
+        return read_parquet(self.spark, *dirs)

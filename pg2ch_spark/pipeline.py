@@ -36,6 +36,7 @@ from pg2ch_spark.cdc.merge_sink import (
     BufferedMergeSink,
     ReplacingMergeSink,
     merge_batch,
+    read_parquet,
 )
 
 ENGINES = ("ReplacingMergeTree", "CollapsingMergeTree", "MergeTree")
@@ -149,7 +150,7 @@ class _AppendSink:
         # Partition discovery surfaces the epoch= dirs as a synthetic
         # column; it is commit bookkeeping, not part of the log schema,
         # so drop it from the reader-facing state.
-        return self.spark.read.parquet(self.path).drop("epoch")
+        return read_parquet(self.spark, self.path).drop("epoch")
 
     def final(self) -> DataFrame | None:
         return self.state()
@@ -203,7 +204,7 @@ class _CollapsingSink(_AppendSink):
         prior = [a for a in self._applied_epochs() if a < before_epoch]
         if not prior:
             return None
-        return self.spark.read.parquet(self._snapshot_path(prior[-1]))
+        return read_parquet(self.spark, self._snapshot_path(prior[-1]))
 
     def truncate(self) -> None:
         """R10 wipes the signed log AND the per-key side state — after a

@@ -687,3 +687,49 @@ def test_live_walsender_typed_collapsing(spark, tmp_path):
 
     got = [(r.id, r.balance) for r in final.collect()]
     assert got == [(1, Decimal("15.50"))]  # key 2 collapsed away
+
+
+def test_daemon_fanout_renders_timestamps_in_utc(spark, tmp_path, http_stub):  # noqa: F811
+    """The spool stores timestamps UTC-naive, so the ClickHouse bodies
+    must render them in UTC whatever zone the session started with:
+    `run_pipeline` sets the session zone to UTC (catalog.configure)
+    before any batch runs, so a New York session still ships 12:00."""
+    import datetime as dt
+    import io
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg2ch_spark.config import config_from_mapping
+    from pg2ch_spark.daemon import run_daemon
+    from pg2ch_spark.sources.spool import typed_spool_schema
+
+    endpoint, received = http_stub
+    spool = tmp_path / "spool"
+    os.makedirs(spool)
+    columns = {"ts": "timestamp"}
+    pq.write_table(
+        pa.Table.from_pylist(
+            [{"table": "ev", "key": 1, "ver": 1, "op": "I",
+              "ts": dt.datetime(2024, 1, 1, 12, 0, 0)}],
+            schema=typed_spool_schema("key", "bigint", columns),
+        ),
+        str(spool / f"cdc-{0x100:016x}.parquet"),
+    )
+    cfg = config_from_mapping(
+        {
+            "source": {"sf_dir": str(spool), "format": "cdc"},
+            "state_root": str(tmp_path / "state"),
+            "tables": {"ev": {"columns": columns}},
+            "clickhouse": {"endpoint": endpoint, "database": "db"},
+        }
+    )
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        assert run_daemon(cfg, spark, once=True, out=io.StringIO()) == 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    body = b"".join(b for _, b in received).decode()
+    assert "2024-01-01 12:00:00" in body, body

@@ -215,6 +215,21 @@ def checkpoint_calls(spark, monkeypatch):
     return calls
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn, *args)`` runs ``fn(*args)`` and returns (Spark
+    jobs it launched, its result), read off the DAG scheduler's job id
+    counter."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def count(fn, *args, **kwargs):
+        before = int(dag.nextJobId())
+        out = fn(*args, **kwargs)
+        return int(dag.nextJobId()) - before, out
+
+    return count
+
+
 @pytest.mark.parametrize("seed", [7, 21, 99])
 def test_collapsing_carry_equals_global_expansion(spark, tmp_path, seed):
     """Property: for a random op log split into random batches, the
@@ -665,7 +680,7 @@ def test_truncate_wipes_collapsing_and_append_sinks(spark, tmp_path):
 
 
 @pytest.mark.parametrize("with_marker", [False, True])
-def test_truncate_horizon_is_one_job(spark, with_marker):
+def test_truncate_horizon_is_one_job(spark, count_jobs, with_marker):
     """The horizon read runs on every micro-batch, marker or not, so it
     is one collect of the marker rows, not a two-stage aggregate."""
     from pg2ch_spark.cdc.merge_sink import truncate_horizon
@@ -674,10 +689,8 @@ def test_truncate_horizon_is_one_job(spark, with_marker):
     if with_marker:
         rows += [(None, 2, "T", None), (None, 4, "T", None)]
     df = _cdc_batch(spark, rows)
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = int(dag.nextJobId())
-    horizon = truncate_horizon(df, "ver")
-    assert int(dag.nextJobId()) - before == 1
+    jobs, horizon = count_jobs(truncate_horizon, df, "ver")
+    assert jobs == 1
     assert horizon == (4 if with_marker else None)
 
 
@@ -810,3 +823,145 @@ def test_concurrent_tables_match_serial(spark, tmp_path):
         s = read_state(spark, spec, str(tmp_path / "s1")).collect()
         c = read_state(spark, spec, str(tmp_path / "s2")).collect()
         assert sorted(map(tuple, s)) == sorted(map(tuple, c)), spec.main_table
+
+
+# ---------------------------------------------------------------------------
+# Fixed Spark work per micro-batch: sink state reads launch no job
+# (merge_sink.read_parquet takes the schema from a footer on the
+# driver), and the bucketed flush is one shuffle.
+
+_FOUR_ENGINES = [
+    TableSpec(main_table="t_replacing"),
+    TableSpec(main_table="t_bucketed", n_buckets=4),
+    TableSpec(main_table="t_collapsing", engine="CollapsingMergeTree"),
+    TableSpec(main_table="t_append", engine="MergeTree"),
+]
+
+
+@pytest.mark.parametrize("spec", _FOUR_ENGINES, ids=lambda s: s.main_table)
+def test_read_state_launches_no_job(spark, tmp_path, count_jobs, spec):
+    from pg2ch_spark.cdc.merge_sink import merge_batch
+    from pg2ch_spark.pipeline import build_sink
+
+    root = str(tmp_path / "state")
+    batches = [
+        [(1, 1, "I", 10.0), (2, 2, "I", 20.0), (3, 3, "I", 30.0)],
+        [(1, 4, "U", 11.0), (2, 5, "D", 20.0)],
+    ]
+    for epoch, rows in enumerate(batches):
+        merge_batch(build_sink(spark, spec, root), _cdc_batch(spark, rows), epoch)
+    jobs, state = count_jobs(read_state, spark, spec, root)
+    assert jobs == 0
+    if spec.engine == "CollapsingMergeTree":
+        assert {r.key: r.net for r in state.collect()} == {1: 1, 3: 1}
+    elif spec.engine == "MergeTree":
+        assert state.count() == 5
+    else:
+        got = {r.key: (r.ver, r.op) for r in state.collect()}
+        assert got == {1: (4, "U"), 2: (5, "D"), 3: (3, "I")}
+
+
+def test_bucketed_flush_into_state_is_five_jobs(spark, tmp_path, count_jobs):
+    """A bucketed merge that flushes into existing buckets: the buffer
+    append (1), the touched-bucket probe (2) and the one-shuffle merge
+    write (2). Reading the buffer and the touched buckets adds none."""
+    from pg2ch_spark.cdc.merge_sink import BucketedMergeSink
+
+    sink = BucketedMergeSink(
+        spark, str(tmp_path / "b"), "key", "ver", merge_every=1, n_buckets=4
+    )
+    sink.merge(_cdc_batch(spark, [(k, k, "I", float(k)) for k in range(40)]))
+    delta = _cdc_batch(spark, [(k, 100 + k, "U", -1.0) for k in range(0, 40, 3)])
+    jobs, _ = count_jobs(sink.merge, delta)
+    assert jobs == 5
+    got = {r.key: r.ver for r in sink.state().collect()}
+    assert got == {k: (100 + k if k % 3 == 0 else k) for k in range(40)}
+
+
+def test_replacing_merge_over_state_is_two_jobs(spark, tmp_path, count_jobs):
+    """The argmax window's shuffle and the commit write; reading the
+    existing state launches no job."""
+    from pg2ch_spark.cdc.merge_sink import ReplacingMergeSink
+
+    sink = ReplacingMergeSink(spark, str(tmp_path / "r"), "key", "ver")
+    sink.merge(_cdc_batch(spark, [(k, k, "I", float(k)) for k in range(10)]))
+    jobs, _ = count_jobs(sink.merge, _cdc_batch(spark, [(3, 50, "U", -3.0)]))
+    assert jobs == 2
+    got = {r.key: r.value for r in sink.state().collect()}
+    assert got == {k: (-3.0 if k == 3 else float(k)) for k in range(10)}
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_read_parquet_falls_back_without_spark_footer(spark, tmp_path):
+    """A dir pyarrow wrote carries no Spark schema key: the read infers,
+    giving exactly what `spark.read.parquet` gives."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg2ch_spark.cdc.merge_sink import read_parquet
+
+    d = tmp_path / "pa"
+    os.makedirs(d)
+    pq.write_table(
+        pa.table({"key": pa.array([1, 2], pa.int64()), "v": ["a", None]}),
+        str(d / "part-0.parquet"),
+    )
+    got, want = read_parquet(spark, str(d)), spark.read.parquet(str(d))
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want) == [(1, "a"), (2, None)]
+
+
+def test_read_parquet_typed_state_schema_equals_inferred(
+    spark, tmp_path, count_jobs
+):
+    """The footer schema of a typed Replacing state is the inferred one:
+    decimal, date, timestamp and array columns keep their types."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pg2ch_spark.cdc.merge_sink import ReplacingMergeSink, read_parquet
+    from pg2ch_spark.cdc.typed_query import _TYPED_COLUMNS
+
+    cols = ", ".join(f"{n} {t}" for n, t in _TYPED_COLUMNS.items())
+    batch = spark.createDataFrame(
+        [
+            (1, 1, "I", Decimal("19.99"), dt.date(2024, 1, 2),
+             dt.datetime(2024, 1, 2, 3, 4, 5), "u1", [1, 7]),
+            (2, 2, "I", None, None, None, None, None),
+        ],
+        f"key bigint, ver bigint, op string, {cols}",
+    )
+    path = str(tmp_path / "typed")
+    ReplacingMergeSink(spark, path, "key", "ver").merge(batch)
+    jobs, got = count_jobs(read_parquet, spark, path)
+    assert jobs == 0
+    want = spark.read.parquet(path)
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
+def test_read_parquet_walks_into_partition_dirs(spark, tmp_path, count_jobs):
+    """A `_b=` partitioned staging dir: the leading `_` marks metadata
+    only on names without `=`, so the walk finds the part files below."""
+    import pyspark.sql.functions as F
+
+    from pg2ch_spark.cdc.merge_sink import read_parquet
+
+    staging = str(tmp_path / "staging")
+    (
+        _cdc_batch(spark, [(k, k, "I", float(k)) for k in range(8)])
+        .withColumn("_b", F.pmod(F.col("key"), F.lit(3)))
+        .write.partitionBy("_b")
+        .parquet(staging)
+    )
+    top = os.listdir(staging)
+    assert {n for n in top if "=" in n} == {"_b=0", "_b=1", "_b=2"}
+    assert not any(n.endswith(".parquet") for n in top)
+    jobs, got = count_jobs(read_parquet, spark, staging)
+    assert jobs == 0
+    want = spark.read.parquet(staging)
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
